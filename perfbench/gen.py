@@ -40,13 +40,13 @@ TEXT = ["documents", "embeddings"]
 #  - fixture_small: the bench fixtures' shape, sf0.1 relational tables, one file
 #    and one row group per table, so scans are single-task and walls are
 #    fixed cost. The text tables are a fifth of sf0.1's.
-#  - rows: sf0.1 relational tables in 8 files per table with 8k-row groups
+#  - rows: sf0.2 relational tables in 8 files per table with 8k-row groups
 #    (events stays one file, which the stream source requires), so scans fan
 #    out over every core.
 FAMILIES = {
     "fixture_small": {"tables": RELATIONAL + TEXT, "sf": 0.1, "files": 1,
                       "row_group": None, "docs": 1_000, "vecs": 500},
-    "rows": {"tables": RELATIONAL, "sf": 0.1, "files": 8,
+    "rows": {"tables": RELATIONAL, "sf": 0.2, "files": 8,
              "row_group": 8_192},
 }
 GENERATOR_VERSION = 1

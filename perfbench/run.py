@@ -5,7 +5,7 @@
 
 Builds the engine with the benchmark's own sbt project on first use,
 generates the workload's tables from the seed (gen.py, cached under
-.bench_build/data), measures JVM set-up three times, runs the queries in one
+.bench_build/data), measures JVM set-up twice, runs the queries in one
 JVM at local[N] (Main.scala) and checks every query's output against its
 DuckDB oracle SQL. The last stdout line is the record: end-to-end metrics
 with --trace 0, per-layer metrics (from a traced run) with --trace 1.
@@ -15,11 +15,13 @@ import argparse
 import hashlib
 import json
 import os
+import queue
 import shutil
 import signal
 import statistics
 import subprocess
 import sys
+import threading
 import time
 from pathlib import Path
 
@@ -31,10 +33,14 @@ CLASSES = BUILD / "sbt-target" / "scala-2.13" / "classes"
 sys.path.insert(0, str(HERE))
 import gen  # noqa: E402
 
-SETUPS = 3
+SETUPS = 2
 MAX_CORES = 4
 HEAP = "2g"
-RUN_TIMEOUT_S = 170
+YOUNG = "768m"
+# A run's deadline: this much for the set-ups, the cold pass and the check
+# (together 35-50 s on a 4-core VM), plus twice --seconds for the steady
+# passes, since a traced run adds a traced pass after each untraced one.
+FIXED_TIMEOUT_S = 140
 ADD_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
     "java.base/java.io", "java.base/java.net", "java.base/java.nio", "java.base/java.util",
@@ -89,10 +95,11 @@ def java_cmd(args, work, cores):
     tmp = work / "tmp"
     tmp.mkdir(parents=True, exist_ok=True)
     opens = [f"--add-opens={p}=ALL-UNNAMED" for p in ADD_OPENS]
-    # A fixed, pre-touched heap: VmHWM is then the heap plus what the
-    # program holds outside it, not an artefact of when GC grew the heap.
-    return (["java", *opens, f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:+AlwaysPreTouch",
-             "-XX:-UsePerfData", f"-Djava.io.tmpdir={tmp}",
+    # A heap cap but no floor or pre-touch, so VmHWM follows the memory the
+    # program touches. A fixed young generation keeps the collector's
+    # adaptive young sizing from moving the peak from run to run.
+    return (["java", *opens, f"-Xmx{HEAP}", f"-Xmn{YOUNG}", "-XX:-UsePerfData",
+             f"-Djava.io.tmpdir={tmp}",
              "-Dderby.system.home=" + str(work / "derby"),
              "-cp", f"{CLASSES}:{spark_home}/jars/*", "perfbench.Main",
              "--work", str(work), "--cores", str(cores)] + args)
@@ -102,19 +109,32 @@ LIVE = []
 
 
 def launch(args, work, cores, deadline):
-    """Start the JVM and return (process, seconds until it printed READY)."""
+    """Start the JVM and return (process, seconds until it printed READY).
+    A reader thread drains its stdout, so a JVM that hangs before READY
+    still meets the deadline."""
     t0 = time.monotonic()
     with open(work / "jvm.log", "ab") as err:
         p = subprocess.Popen(java_cmd(args, work, cores), cwd=work, stdout=subprocess.PIPE,
                              stderr=err, text=True, start_new_session=True)
     LIVE.append(p)
-    for line in p.stdout:
-        if line.strip() == "READY":
+    lines = queue.Queue()
+
+    def read():
+        for line in p.stdout:
+            lines.put(line.strip())
+        lines.put(None)
+    threading.Thread(target=read, daemon=True).start()
+    while True:
+        try:
+            line = lines.get(timeout=max(0.0, deadline - time.monotonic()))
+        except queue.Empty:
+            break
+        if line == "READY":
             return p, time.monotonic() - t0
-        if time.monotonic() > deadline:
+        if line is None:
             break
     stop(p)
-    raise SystemExit("perfbench: the JVM exited before its session was ready")
+    raise SystemExit("perfbench: the JVM was not ready before the deadline or exited")
 
 
 def stop(p):
@@ -124,9 +144,9 @@ def stop(p):
 
 
 def finish(p, deadline):
-    """Wait for the JVM, draining its stdout; kill it past the deadline."""
+    """Wait for the JVM; kill it past the deadline."""
     try:
-        p.communicate(timeout=max(1.0, deadline - time.monotonic()))
+        p.wait(timeout=max(1.0, deadline - time.monotonic()))
     except subprocess.TimeoutExpired:
         stop(p)
         raise SystemExit("perfbench: the run did not finish in time")
@@ -194,7 +214,6 @@ def main():
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
-    ap.add_argument("--queries", default="", help="comma list replacing the workload's queries")
     ap.add_argument("--fail-query", default="", help="make this query throw (self-test)")
     a = ap.parse_args()
     if not (ENGINE / "graft" / "SparkEntry.scala").is_file():
@@ -202,7 +221,7 @@ def main():
 
     BUILD.mkdir(exist_ok=True)
     build()
-    deadline = time.monotonic() + RUN_TIMEOUT_S
+    deadline = time.monotonic() + FIXED_TIMEOUT_S + 2 * a.seconds
     data_dir, manifest = gen.ensure(a.workload, a.seed, str(BUILD / "data"))
     data_dir = Path(data_dir)
     work = BUILD / "work" / a.workload
@@ -217,8 +236,6 @@ def main():
         setups.append(s)
     run_args = ["--mode", "run", "--workload", a.workload, "--seed", str(a.seed),
                 "--seconds", str(a.seconds), "--trace", str(a.trace), "--data", str(data_dir)]
-    if a.queries:
-        run_args += ["--queries", a.queries]
     if a.fail_query:
         run_args += ["--fail-query", a.fail_query]
     p, s = launch(run_args, work, cores, deadline)

@@ -19,8 +19,7 @@ import scala.jdk.CollectionConverters._
   */
 object Main {
   final case class Args(mode: String, workload: String, seed: Long, seconds: Double,
-      trace: Boolean, data: String, work: Path, cores: Int, queries: Seq[String],
-      failQuery: String)
+      trace: Boolean, data: String, work: Path, cores: Int, failQuery: String)
 
   def parse(a: Array[String]): Args = {
     val m = a.grouped(2).collect { case Array(k, v) if k.startsWith("--") => k.drop(2) -> v }
@@ -29,8 +28,7 @@ object Main {
     Args(need("mode"), m.getOrElse("workload", ""), m.getOrElse("seed", "0").toLong,
       m.getOrElse("seconds", "1").toDouble, m.getOrElse("trace", "0") == "1",
       m.getOrElse("data", ""), Paths.get(need("work")).toAbsolutePath,
-      need("cores").toInt, m.get("queries").map(_.split(",").toSeq.filter(_.nonEmpty))
-        .getOrElse(Nil), m.getOrElse("fail-query", ""))
+      need("cores").toInt, m.getOrElse("fail-query", ""))
   }
 
   /** The bench's deployment posture (graft.Bench's session) with every
@@ -76,11 +74,8 @@ object Main {
 }
 
 final class Runner(spark: SparkSession, args: Main.Args) {
-  private val workload = Workloads.all.getOrElse(args.workload,
+  private val ops: Seq[Op] = Workloads.all.getOrElse(args.workload,
     sys.error(s"unknown workload ${args.workload}"))
-  private val ops: Seq[Op] =
-    if (args.queries.isEmpty) workload
-    else args.queries.map(q => workload.find(_.name == q).getOrElse(Op(q)))
   private val out = args.work.resolve("out")
   private val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
   private val sc = spark.sparkContext
@@ -170,10 +165,12 @@ final class Runner(spark: SparkSession, args: Main.Args) {
     try {
       val per = order.flatMap { op =>
         val r = runOp(op)
+        val d0 = System.nanoTime()
         BenchBus.drain(sc)
         val events = c.take()
         r.map { case (wall, cs, c0, c1, e1) =>
           OpTrace(op.name, args.cores, c0, c1, e1, cs, wall, events)
+            .copy(traceS = (System.nanoTime() - d0) / 1e9)
         }
       }
       traces += per
@@ -184,10 +181,10 @@ final class Runner(spark: SparkSession, args: Main.Args) {
   def run(): Unit = {
     val first = pass(traced = false).map(_._2).sum
     // Steady passes fill --seconds: another pass starts only while the
-    // mean pass so far still fits, and there are at least four untraced
+    // mean pass so far still fits, and there are at least three untraced
     // passes (plus as many traced ones with --trace 1).
     val passes = scala.collection.mutable.ArrayBuffer.empty[Seq[(String, Double)]]
-    val minPasses = if (args.trace) 8 else 4
+    val minPasses = if (args.trace) 6 else 3
     val t0 = System.nanoTime()
     def elapsed = (System.nanoTime() - t0) / 1e9
     var i = 0
@@ -231,7 +228,8 @@ final class Runner(spark: SparkSession, args: Main.Args) {
       checks: Seq[(String, String, String)]): Unit = {
     val traced = traces.toSeq.map { per =>
       val m = per.flatMap(_.metrics).groupMapReduce(_._1)(_._2)(_ + _)
-      val wall = per.map(_.wallS).sum
+      // The traced pass pays for its drains and bookkeeping too.
+      val wall = per.map(t => t.wallS + t.traceS).sum
       val layers = m ++ Map(
         "construct_s" -> per.map(_.constructS).sum,
         "plan_s" -> per.map(_.planS).sum,
@@ -257,7 +255,7 @@ final class Runner(spark: SparkSession, args: Main.Args) {
     val runs = traces.toSeq.zipWithIndex.flatMap { case (per, p) =>
       per.map { t =>
         val self = OpTrace.selfMs(t.spans)
-        Json.obj("pass" -> p, "query" -> t.name, "wall_s" -> t.wallS,
+        Json.obj("pass" -> p, "query" -> t.name, "wall_s" -> t.wallS, "trace_s" -> t.traceS,
           "construct_s" -> t.constructS, "plan_s" -> t.planS, "exec_s" -> t.execS,
           "metrics" -> Json.obj(t.metrics.toSeq.sortBy(_._1): _*),
           "spans" -> t.spans.map(s => Json.obj("id" -> s.id, "parent" -> s.parent,

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -33,10 +34,13 @@ final case class StageRec(id: Int, phase: String, jobId: Int, submitMs: Long, en
   * and the shape of its final (post-AQE) physical plan. */
 final case class QeRec(phases: Map[String, (Long, Long)], exchanges: Int,
     codegenStages: Int, codegenFallbacks: Int) {
-  def startMs: Long = if (phases.isEmpty) Long.MaxValue else phases.values.map(_._1).min
   def endMs: Long = if (phases.isEmpty) Long.MinValue else phases.values.map(_._2).max
-  def planMs: Long = phases.values.map { case (s, e) => e - s }.sum
 }
+
+/** What one query run caused, as the listeners saw it. `sqlSpans` are the
+  * (start, end) epoch ms of every finished SQL execution. */
+final case class Events(jobs: Seq[JobRec], stages: Seq[StageRec], qes: Seq[QeRec],
+    sqlSpans: Seq[(Long, Long)], batchCommitMs: Seq[Long])
 
 /** Benchmark-side listeners for one traced pass. Events arrive on Spark's
   * listener threads; [[take]] hands the query thread everything delivered
@@ -49,6 +53,8 @@ final class Collector extends SparkListener {
   private val stages = mutable.ArrayBuffer.empty[StageRec]
   private val qes = mutable.ArrayBuffer.empty[QeRec]
   private val commitMs = mutable.ArrayBuffer.empty[Long] // one per stream batch
+  private val sqlStart = mutable.Map.empty[Long, Long]
+  private val sqlSpans = mutable.ArrayBuffer.empty[(Long, Long)]
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     val phase = Option(e.properties).flatMap(p => Option(p.getProperty(Phase.Key)))
@@ -73,6 +79,13 @@ final class Collector extends SparkListener {
       m.shuffleWriteMetrics.bytesWritten, m.shuffleReadMetrics.totalBytesRead,
       m.diskBytesSpilled, m.inputMetrics.bytesRead, m.inputMetrics.recordsRead,
       m.outputMetrics.bytesWritten, m.outputMetrics.recordsWritten)
+  }
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart => synchronized { sqlStart(s.executionId) = s.time }
+    case s: SparkListenerSQLExecutionEnd =>
+      synchronized { sqlStart.remove(s.executionId).foreach(t => sqlSpans += ((t, s.time))) }
+    case _ =>
   }
 
   val queries: QueryExecutionListener = new QueryExecutionListener {
@@ -121,10 +134,10 @@ final class Collector extends SparkListener {
   }
 
   /** Everything recorded since the last call. */
-  def take(): (Seq[JobRec], Seq[StageRec], Seq[QeRec], Seq[Long]) = synchronized {
-    val out = (jobs.toList, stages.toList, qes.toList, commitMs.toList)
+  def take(): Events = synchronized {
+    val out = Events(jobs.toList, stages.toList, qes.toList, sqlSpans.toList, commitMs.toList)
     jobs.clear(); jobById.clear(); stageOwner.clear(); stages.clear(); qes.clear()
-    commitMs.clear()
+    commitMs.clear(); sqlStart.clear(); sqlSpans.clear()
     out
   }
 }
@@ -154,9 +167,10 @@ object PlanFacts {
   }
 }
 
-/** The layer split of one traced query run. Times in seconds. */
+/** The layer split of one traced query run. Times in seconds; `traceS` is
+  * what tracing added after the run (bus drain and bookkeeping). */
 final case class OpTrace(name: String, wallS: Double, constructS: Double, planS: Double,
-    execS: Double, metrics: Map[String, Double], spans: Seq[Span])
+    execS: Double, metrics: Map[String, Double], spans: Seq[Span], traceS: Double = 0.0)
 
 final case class Span(id: Long, parent: Long, name: String, startMs: Long, endMs: Long) {
   def durMs: Long = endMs - startMs
@@ -186,19 +200,22 @@ object OpTrace {
 
   /** Build the split of one query run from its two phase windows (epoch ms
     * for span placement, nanoTime seconds for the walls) and the events the
-    * run caused. Planning is what the tracker of each SQL execution that
-    * started in the exec window recorded; exec is the rest of that window
-    * after planning ended, so construct + plan + exec is checked against
-    * the wall rather than equal to it by definition. */
+    * run caused. Each part is timed on its own: construct by the query
+    * thread, plan by the trackers of the SQL executions that ended in the
+    * exec window, exec by Spark's SQL execution start/end events (minus
+    * the planning inside them). Exec time outside any SQL execution, or an
+    * execution the listeners missed, leaves a residual against the wall. */
   def apply(name: String, cores: Int, c0: Long, c1: Long, e1: Long, constructS: Double,
-      wallS: Double, events: (Seq[JobRec], Seq[StageRec], Seq[QeRec], Seq[Long])): OpTrace = {
-    val (jobs, stages, qes, batchCommitMs) = events
-    val execQes = qes.filter(_.startMs >= c1)
-    val planS = execQes.map(_.planMs).sum / 1e3
-    val planEnd = if (execQes.isEmpty) c1 else execQes.map(_.endMs).max
-    val execS = math.max(0L, e1 - planEnd) / 1e3
+      wallS: Double, events: Events): OpTrace = {
+    val Events(jobs, stages, qes, sqlSpans, batchCommitMs) = events
+    val execQes = qes.filter(_.endMs > c1)
+    val planIv = execQes.flatMap(_.phases.values)
+    val planMs = unionMs(planIv, c1, e1)
+    val planS = planMs / 1e3
+    val execS = (unionMs(sqlSpans ++ planIv, c1, e1) - planMs) / 1e3
+    val planEnd = (planIv.map(_._2).filter(_ <= e1) :+ c1).max
     val execStages = stages.filter(_.phase == Phase.Exec)
-    val stageBusyS = unionMs(execStages.map(s => (s.submitMs, s.endMs)), planEnd, e1) / 1e3
+    val stageBusyS = unionMs(execStages.map(s => (s.submitMs, s.endMs)), c1, e1) / 1e3
     val execRunS = execStages.map(_.runMs).sum / 1e3
     def sum(f: StageRec => Long): Double = stages.map(f).sum.toDouble
     val metrics = Map(
@@ -227,7 +244,7 @@ object OpTrace {
       "split_residual_s" -> math.abs(wallS - (constructS + planS + execS)))
     val root = span(0, s"query:$name", c0, e1)
     val construct = span(root.id, "construct", c0, c1)
-    val plan = span(root.id, "plan", if (execQes.isEmpty) c1 else execQes.map(_.startMs).min, planEnd)
+    val plan = span(root.id, "plan", (planIv.map(_._1).filter(_ >= c1) :+ planEnd).min, planEnd)
     val exec = span(root.id, "exec", planEnd, e1)
     val jobSpans = jobs.map { j =>
       j.id -> span(if (j.phase == Phase.Construct) construct.id else exec.id,

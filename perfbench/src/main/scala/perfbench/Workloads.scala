@@ -15,12 +15,15 @@ object Workloads {
   val all: Map[String, Seq[Op]] = Map(
     // One-row-group sf0.1 tables: walls are construction, planning and
     // per-job fixed cost (the MRBench regime). The banded n-gram Jaccard
-    // runs six jobs while its DataFrame is built, on its own session.
+    // runs six jobs while its DataFrame is built, on its own session; the
+    // sliding-window stream runs to memory, committing state, while its
+    // DataFrame is built.
     "fixture_small" ->
-      Seq(Op("q1_pricing_summary"), Op("rel_topk"), Op("dedup_ngram_jaccard", banded = true)),
-    // Multi-file sf0.1 tables: the TeraSort stand-in scans lineitem over
+      Seq(Op("q1_pricing_summary"), Op("dedup_ngram_jaccard", banded = true),
+        Op("stream_sliding")),
+    // Multi-file sf0.2 tables: the TeraSort stand-in scans lineitem over
     // every core, range-shuffles it and writes it as parquet, and the
-    // sliding-window stream commits state, so executor CPU, shuffle, the
-    // io write path and state commits dominate (the GridMix/TeraSort regime).
-    "rows" -> Seq(Op("rel_global_sort", Parquet), Op("stream_sliding")))
+    // per-order aggregate hash-shuffles it, so executor CPU, shuffle and
+    // the io read and write paths dominate (the GridMix/TeraSort regime).
+    "rows" -> Seq(Op("rel_global_sort", Parquet), Op("agg_sum_by_key")))
 }

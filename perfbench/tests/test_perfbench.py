@@ -2,8 +2,8 @@
 
     python3 -m unittest discover -s perfbench/tests -v
 
-The end-to-end cases run the real benchmark on a one- or two-query slice of
-fixture_small, so they take a few minutes and build the engine on first use.
+The end-to-end cases run the real benchmark on the fixture_small workload,
+so they take a few minutes and build the engine on first use.
 """
 import json
 import os
@@ -51,7 +51,7 @@ class RecordTest(unittest.TestCase):
     spec = json.loads((ROOT / "BENCHMARK.json").read_text())
 
     def check_metrics(self, trace, section):
-        r = run_bench("--trace", str(trace), "--queries", "rel_topk")
+        r = run_bench("--trace", str(trace))
         self.assertEqual(r.returncode, 0, r.stderr[-2000:])
         rec = last_record(r)
         self.assertEqual(set(rec), {"correct", "attempted", "failed", "metrics"})
@@ -69,8 +69,7 @@ class RecordTest(unittest.TestCase):
         self.check_metrics(1, "per_layer")
 
     def test_forced_failure_counts(self):
-        r = run_bench("--trace", "0", "--queries", "rel_topk,q1_pricing_summary",
-                      "--fail-query", "rel_topk")
+        r = run_bench("--trace", "0", "--fail-query", "q1_pricing_summary")
         self.assertEqual(r.returncode, 0, r.stderr[-2000:])
         rec = last_record(r)
         self.assertFalse(rec["correct"])
