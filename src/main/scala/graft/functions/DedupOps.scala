@@ -261,11 +261,13 @@ object DedupOps extends QueryPack {
     // pinned until an explicit unpersist — repeated invocations in a long
     // session would accumulate storage. The checkpoint's backing blocks
     // are released by the ContextCleaner as soon as the returned plan is
-    // unreferenced. LAZY since round 22 (was eager): the dedicated
-    // construction-time materialization job sat inside the bench's timed
-    // region; letting the first consumer materialize it drops one job per
-    // pass with NO double-compute of the scan+signature subtree (profiled:
-    // the band-stream map stage runs once per pass either way — the first
+    // unreferenced. LAZY since round 22 (was eager), which under AQE is
+    // only partly lazy: building the checkpoint RDD still runs this plan's
+    // shuffle stages as jobs at construction — 2 jobs, against 3 for the
+    // eager form (ConstructionJobsSpec); only the final result stage moves
+    // into the first consumer. That saves one construction job per pass
+    // with NO double-compute of the scan+signature subtree (profiled: the
+    // band-stream map stage runs once per pass either way — the first
     // consumer is jaccardStats' candDocs broadcast build, which completes
     // before the pair joins submit). A/B min-of-3 at sf0.1: eager
     // 1.40/1.16 s vs lazy 1.25/1.03 s, jobs 14 → 12 (with the shN
@@ -274,25 +276,23 @@ object DedupOps extends QueryPack {
 
   /** The candidate-generation subtree WITHOUT the closing checkpoint
     * boundary — [[minhashCandidates]] minus its `localCheckpoint`, exposed
-    * so plan dumps (DumpPlans) can show the signature/banding stages that
-    * the checkpoint otherwise collapses to `Scan ExistingRDD`.
+    * so plan dumps (Harness `plans`) can show the signature/banding stages
+    * that the checkpoint otherwise collapses to `Scan ExistingRDD`. With
+    * the cap off (the default), constructing this frame runs no job.
     *
     * CAP-ON NOTE: with [[bucketCap]] > 0 the band stream is routed through
     * an INNER `localCheckpoint` so the cap's consumers (the sizes
     * aggregation and both self-join legs) read one materialized stream
     * instead of each embedding its own copy of the scan+signature subtree
     * (measured 4 full passes; ReuseExchange did not unify them — PlanSpec
-    * pins the single-pass shape). The checkpoint is LAZY (round 13, r12
-    * advice #4): constructing this frame runs NO job — the first action
-    * materializes the band stream once and every later pass reads the
-    * persisted blocks. (On the very first action, AQE may submit the two
-    * leaf stages that share the stream concurrently, so a partition can be
-    * computed twice in that race — a bounded first-run cost, chosen over
-    * the eager form's construction-time corpus job, which made plan dumps,
-    * analysis-only tests, and A/B frame construction execute Spark jobs as
-    * a side effect.) A dump with the cap set shows the capped subtree
-    * above `Scan ExistingRDD`; dump with the cap unset (the default) to
-    * see the full lazy pipeline.
+    * pins the single-pass shape). That checkpoint is LAZY (round 13, r12
+    * advice #4) and has no shuffle below it, so it runs no job itself. But
+    * constructing this frame with the cap on still runs 4 jobs under AQE
+    * (2 with AQE off; ConstructionJobsSpec): [[dropOversizedBuckets]]'
+    * eager sizes checkpoint and its tripwire stats read, which also
+    * materialize the band stream at construction. A dump with the cap set
+    * therefore runs those jobs and shows the capped subtree above `Scan
+    * ExistingRDD`; dump with the cap unset to see the full pipeline.
     */
   private[graft] def minhashCandidatesPlan(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -570,10 +570,14 @@ object DedupOps extends QueryPack {
       .withColumn("n", count(lit(1)).over(Window.partitionBy($"doc_id")))
       // candidate-slice only; localCheckpoint over .cache() for the same
       // ContextCleaner-managed lifetime as minhashCandidates above. LAZY
-      // since round 22 (was eager), same reasoning and A/B as there: the
-      // first join leg materializes the slice, the second reads the
-      // persisted blocks — one construction job less per pass, slice
-      // subtree still computed exactly once (profiled).
+      // since round 22 (was eager), same A/B as there and partly lazy in
+      // the same way: under AQE building this checkpoint still runs the
+      // slice subtree's jobs at construction, and only the final stage
+      // moves into the first join leg (the second reads the persisted
+      // blocks) — one construction job less per pass, slice subtree still
+      // computed exactly once (profiled). Constructing minhashLsh runs 6
+      // jobs under AQE — 2 for the candidate checkpoint, 4 for this one —
+      // and 1 without AQE (ConstructionJobsSpec).
       .localCheckpoint(false)
     // NO broadcast hint on the candidate PAIR set (round 11): it is
     // candidate-proportional, and a forced broadcast of it is the same

@@ -216,7 +216,8 @@ object SimilarityOps extends QueryPack {
     // planesPerTable separate CASE WHEN dot_product(emb, <literal>) columns,
     // whose per-element boxed literal access cost 275 µs/row at 8×8 (the
     // bucketing, not the candidate join, was 95% of banded wall time;
-    // the Harness `banded` subcommand). posexplode yields (table, bucket) pairs.
+    // SCALE.md round 6's stage decomposition). posexplode yields (table,
+    // bucket) pairs.
     //
     // `within` columns partition the index (e.g. per-label): buckets only
     // pair inside the same partition value, shrinking candidate volume

@@ -521,8 +521,8 @@ object TextOps extends QueryPack {
     * then meet the eval grams in a hint-free exact join (AQE picks the
     * strategy), so false positives cannot reach the output. Correctness is
     * knob-independent (ExactnessSpec), the bloom-below-join plan shape is
-    * PlanSpec-pinned, and the outgrown-broadcast A/B is Harness
-    * `decontam-bloom` (SCALE.md round 12).
+    * PlanSpec-pinned, and the outgrown-broadcast A/B is recorded in
+    * SCALE.md round 12 (226 → 28 MB shuffled on a 50k-doc stress corpus).
     */
   /** Per-corpus-doc count of distinct 3-gram overlaps with the eval set —
     * the shared core of [[decontaminate]] and [[corpusSelect]]. */

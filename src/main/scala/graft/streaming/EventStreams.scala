@@ -281,8 +281,7 @@ object EventStreams {
     * return the materialized result — real incremental execution, memory
     * sink, AvailableNow trigger.
     *
-    * Checkpoint-file checksums are OFF here by default (round 22, dialable
-    * via `graft.stream.checkpoint.checksum`). Spark 4.1's
+    * Checkpoint-file checksums are always OFF here (round 22). Spark 4.1's
     * ChecksumCheckpointFileManager writes a checksum sidecar per checkpoint
     * file and every state-store commit BLOCKS on that async write — thread
     * dumps during the stateful stage showed every task parked in
@@ -290,19 +289,25 @@ object EventStreams {
     * the stage's summed executor time (stream_tumbling's stateful stage:
     * 29.1 s summed / 0.98 s wall with checksums, 17.9 s / 0.63 s without;
     * whole-query wall 2.9 → 2.0 s). The sidecars exist to detect file
-    * corruption across restarts of DURABLE checkpoints; these witnesses run
-    * on TEMPORARY checkpoint dirs that are deleted when the query ends, so
-    * the sidecars protect files that never survive the session. Production
-    * posture: on HDFS the filesystem already checksums every block natively
-    * (the sidecar is for object stores / raw local disks) — set the dial to
-    * true where the checkpoint is durable and the store doesn't checksum.
+    * corruption across restarts of DURABLE checkpoints. This helper never
+    * sets a `checkpointLocation`, so every run checkpoints into a TEMPORARY
+    * dir that is deleted when the query ends: the sidecars would protect
+    * files that never outlive the run, so there is no case to switch them
+    * on for. A caller with a durable checkpoint writes its own
+    * `writeStream` and keeps Spark's default.
+    *
+    * The checksum conf is saved before and restored after the run on the
+    * caller's session, so a caller-set value survives. That assumes calls
+    * do NOT overlap on one session: two concurrent runs race on the shared
+    * conf — the first to finish restores the caller's value under the one
+    * still running, and the last can restore the other's `false` as if the
+    * caller had set it.
     */
   def runToMemory(spark: SparkSession, streamed: DataFrame, name: String,
       mode: OutputMode = OutputMode.Complete()): DataFrame = {
     val checksumConf = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
     val prior = spark.conf.getOption(checksumConf)
-    spark.conf.set(checksumConf,
-      spark.conf.get("graft.stream.checkpoint.checksum", "false"))
+    spark.conf.set(checksumConf, "false")
     try {
       var started: org.apache.spark.sql.streaming.StreamingQuery = null
       try {

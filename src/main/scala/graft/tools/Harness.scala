@@ -3,8 +3,8 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import graft.core.{Session, Tables}
-import graft.functions.{BandTuner, DedupOps, SimilarityOps, TextOps}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.functions.{BandTuner, DedupOps, SimilarityOps}
+import org.apache.spark.scheduler.SparkListener
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -270,8 +270,8 @@ object Corpora {
     * ⌈nGen/nClusters⌉ members — NOT exactly [[ClusterSize]] when it
     * doesn't divide nGen (a naive nClusters × C(ClusterSize,2) over- or
     * under-counts then, e.g. nGen=45 has C(45,2)=990 true pairs, not
-    * 1,225). Lives next to the generator so the caponly recall
-    * denominator can't drift from the corpus recipe.
+    * 1,225). Lives next to the generator so a recall denominator on this
+    * corpus can't drift from the corpus recipe.
     */
   def plantedGenuinePairs(n: Int): Long = {
     val nGen = (n * GenuineFrac).toInt
@@ -279,51 +279,6 @@ object Corpora {
     val (q, r) = ((nGen / nClusters).toLong, (nGen % nClusters).toLong)
     def c2(m: Long) = m * (m - 1) / 2
     r * c2(q + 1) + (nClusters - r) * c2(q)
-  }
-
-  /** Decontamination stress corpus: 5 LARGE eval documents (`evalTokens`
-    * tokens each — the regime where the eval-gram set strains the
-    * broadcast budget) plus n 200-token corpus docs from a DISJOINT
-    * vocabulary, every 20th corpus doc contaminated with a 30-token eval
-    * window. Eval token j of doc d is a deterministic integer mix of
-    * (d, j) — O(1) random access, so splicing a window into a corpus doc
-    * never regenerates an eval prefix (and no per-id RNG first-draw
-    * pathology, the boilerplate generator's lesson). Disjoint vocabularies
-    * make the miss rate ~100% off the planted windows — the honest shape
-    * for measuring a miss-killing prefilter.
-    */
-  def generateDecontamDocs(spark: SparkSession, n: Int, evalTokens: Int,
-      seed: Int = 29): String = {
-    import spark.implicits._
-    // the splice below needs a valid 30-token window start in
-    // [0, evalTokens - 30); at exactly 30 the modulus is 0 (divide error)
-    // and below it the window would index past the eval doc — fail loudly
-    // rather than generate a corpus with no real contamination
-    require(evalTokens > 30,
-      s"evalTokens must exceed the 30-token splice window, got $evalTokens")
-    val vocabE = math.max(2, evalTokens / 2)
-    def evTok(d: Long, j: Int): String =
-      "e" + math.floorMod((d * 1000003L + j) * 2654435761L >>> 13, vocabE.toLong)
-    val docs = spark.range(n + 5L).map { i =>
-      val text =
-        if (i < 5) (0 until evalTokens).map(j => evTok(i, j)).mkString(" ")
-        else {
-          val r = new scala.util.Random(seed * 7919L + i)
-          val toks = Array.fill(200)("w" + r.nextInt(50000))
-          if (i % 20 == 5) {
-            // i ≡ 5 (mod 20) makes i % 5 the constant 0 — derive the eval
-            // doc from the contamination ordinal so windows cycle across
-            // all 5 eval docs as intended
-            val ev = (i / 20) % 5
-            val off = math.floorMod(i * 37L, (evalTokens - 30).toLong).toInt
-            (toks.take(170) ++ (off until off + 30).map(j => evTok(ev, j))).mkString(" ")
-          } else toks.mkString(" ")
-        }
-      (i, text)
-    }.toDF("doc_id", "text")
-    val dir = s"/tmp/graft_decontam/n${n}_e$evalTokens"
-    docs.repartition(32).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    dir
   }
 
   /** The measurement ritual: warm once (codegen + shuffle-file setup out
@@ -336,69 +291,21 @@ object Corpora {
   }
 }
 
-/** Shuffle-bytes measurement rig shared by the A/B subcommands
-  * (`verify-shuffle`, `decontam-bloom`): one task-metrics listener plus
-  * the settle/zero/min-of-3 ritual, factored so a protocol change (the
-  * settle duration, which pass feeds the byte figures) lands in every
-  * A/B at once instead of silently diverging per copy. Listener events
-  * drain async and the bus has no public waitUntilEmpty, so reads quiesce
-  * through the deterministic [[BusDrain]] sentinel before zeroing/reading
-  * counters; the warm pass takes codegen + shuffle-file setup out of the
-  * measurement, and only the LAST timed pass (counters zeroed right
-  * before it) feeds the byte figures.
-  */
-final class ShuffleMeter(spark: SparkSession) {
-  private val shufRead = new AtomicLong
-  private val shufWrite = new AtomicLong
-  spark.sparkContext.addSparkListener(new SparkListener {
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-  })
-  /** (min wall of 3, shuffle bytes read, written) — bytes from the last
-    * timed pass only. `warm = false` skips the warm pass for callers that
-    * just executed the same pipeline anyway (e.g. a diagnostic `count()`
-    * — codegen and shuffle files are already in place; re-warming would
-    * be a fifth full execution for nothing). */
-  def measured(f: => Unit, warm: Boolean = true): (Double, Long, Long) = {
-    if (warm) f
-    val times = (1 to 3).map { i =>
-      if (i == 3) { BusDrain.drain(spark); shufRead.set(0); shufWrite.set(0) }
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    BusDrain.drain(spark)
-    (times.min, shufRead.get, shufWrite.get)
-  }
-}
-
-object ShuffleMeter {
-  def mb(x: Long): String = f"${x / 1048576.0}%.0fMB"
-}
-
-/** Deterministic listener-bus quiesce shared by the task-metrics rigs
-  * (round 16 — r15 verdict #3: replaces the TWO fixed
-  * `Thread.sleep(2000)` "settle" copies in [[ShuffleMeter]] and the
-  * skew-minhash A/B, which were both slow and, on a loaded box, not
-  * actually sufficient). Determinism rides the same bus contract the
-  * ccchain sentinel drain (round 15) established: every listener added
-  * via `addSparkListener` shares ONE async queue whose dispatch thread
-  * delivers each event to ALL listeners before the next event, so once
-  * a sentinel job's JobEnd reaches the listener registered here, every
-  * event posted before it — in particular every TaskEnd of jobs whose
-  * actions already returned — has been delivered to every listener in
-  * the queue. The sentinel is a single-partition RDD count — exactly ONE
-  * job with one shuffle-free task, so the JobEnd latch is exact (no AQE
-  * sub-jobs to race) and the sentinel contributes zero shuffle bytes.
-  * Latching on JobEnd (not JobStart) also orders that one TaskEnd before
-  * the latch release: a drain-then-CLEAR caller never sees it, and the
-  * one drain-then-read counter it would skew (task durations in the skew
-  * rig) excludes it by [[SentinelPrefix]]-keyed stage id. ccchain's
-  * job-counting window latches through this drain too, excluding
-  * sentinel JobStarts from its count by the same prefix.
+/** Deterministic listener-bus quiesce (round 16 — replaced fixed
+  * `Thread.sleep` "settle" waits, which were slow and, on a loaded box,
+  * not actually sufficient). Every listener added via `addSparkListener`
+  * shares ONE async queue whose dispatch thread delivers each event to ALL
+  * listeners before the next event, so once a sentinel job's JobEnd
+  * reaches the listener registered here, every event posted before it —
+  * in particular every TaskEnd of jobs whose actions already returned —
+  * has been delivered to every listener in the queue. The sentinel is a
+  * single-partition RDD count — exactly ONE job with one shuffle-free
+  * task, so the JobEnd latch is exact (no AQE sub-jobs to race) and the
+  * sentinel contributes zero shuffle bytes. Latching on JobEnd (not
+  * JobStart) also orders that one TaskEnd before the latch release: a
+  * drain-then-CLEAR caller never sees it, and drain-then-read counters
+  * (`profile-stages`' stage lines, [[countJobs]]) exclude the sentinel by
+  * its [[SentinelPrefix]] job description.
   */
 object BusDrain {
   /** Job-description prefix of every drain sentinel — counters that must
@@ -447,65 +354,66 @@ object BusDrain {
         "listener bus did not deliver the drain sentinel JobEnd within 60s")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** `f`'s result and the number of Spark jobs it started, drain sentinels
+    * excluded. The bus is drained before the counting listener attaches,
+    * so no earlier job lands in the window, and again before the count is
+    * read, so every job `f` started has been delivered. */
+  def countJobs[A](spark: SparkSession)(f: => A): (A, Int) = {
+    drain(spark)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val d = Option(j.properties)
+          .map(_.getProperty("spark.job.description")).orNull
+        if (d == null || !d.startsWith(SentinelPrefix)) jobs.incrementAndGet()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { val a = f; drain(spark); (a, jobs.get) }
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
-/** The measurement harness behind SCALE.md, consolidated (r9 verdict #5)
-  * from 12 single-purpose mains into one entrypoint:
+/** The measurement harness behind SCALE.md — the one tool entry point:
   *
   * {{{
   * sbt "runMain graft.tools.Harness <subcommand> [args...]"
   * }}}
   *
   * Subcommands (run with no args for this list):
-  *  - `time-queries <name>...` — time registered queries across SF dirs
+  *  - `profile-stages <query>...|all` — per-stage wall/tasks/shuffle of one warmed run
   *  - `scale [n...]` — replicate lineitem N× and time headline shapes
-  *  - `q1` / `join3` / `minhash` — segment/shape A/Bs for those pipelines
-  *  - `object-agg [groups...]` — ObjectHashAggregate fallback boundary
-  *  - `exactness [dir]` — exact vs banded A/B for the knobbed queries
-  *  - `ab-prefilter [dir]` — int8 candidate-prefilter on/off A/B
-  *  - `verify-shuffle [n|dir:<path>] [shape] [bucketcap]` — string vs hash shingle keys in the jaccard verify
-  *  - `topk-encoder [nKeys] [rowsPerKey] [k]` — struct vs kryo bounded-top-k buffer A/B
-  *  - `decontam-bloom [n] [evalTokens]` — decontaminate bloom-prefilter A/B
-  *  - `sim-bucketcap [n,...] [hotFrac] [cap] [full|caponly] [shape]` — embedding-side bucket cap A/B
   *  - `cc-chain [n...]` — star-contraction rounds/wall on path graphs
-  *  - `skew-minhash [n] [hotFrac]` — AQE skew-split evidence, hot-bucket corpus
-  *  - `banded [dir] [shape]` — banded pipeline stage decomposition
   *  - `crossover [n...]` — exact↔banded crossover on clustered corpus
   *  - `probe [n] [shape,...] [bits...]` — multi-probe recall/cost frontier
   *  - `dedup-probe [n] [shape,...] [bits...]` — same for embedding dedup
   *  - `docs-crossover [n...]` — MinHash-route crossover on Zipfian docs
+  *  - `plans <outDir> <suffix> [query...]` — one formatted physical plan per file
   *
   * None of these are part of the driver contract; each subcommand's
   * scaladoc records WHAT question it answers and the SCALE.md round whose
-  * numbers it produced. [[DumpPlans]] stays a separate main: it writes a
-  * repo artifact (PLANS.md) rather than measuring.
+  * numbers it produced. Every subcommand runs at local[`SPARK_GRAFT_CPUS`]
+  * (default 32, like Bench and Verify).
   */
 object Harness {
 
   private def noop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  private def session(appName: String): SparkSession =
+    Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, appName)
+
   private val subs: Seq[(String, String, Array[String] => Unit)] = Seq(
-    ("time-queries", "<name>... — min-of-3 per query per SPARK_GRAFT_SF_DIRS dir", timeQueries),
+    ("profile-stages", "<query>...|all — per-stage wall/tasks/shuffle-bytes of one warmed run", profileStages),
     ("scale", "[n...] — lineitem ×1/2/4/8 scaling of headline shapes", scale),
-    ("q1", "decimal-exact vs double-sum Q1 cost", q1),
-    ("join3", "3-way join: direct vs eager pre-agg", join3),
-    ("minhash", "minhash pipeline segment timing", minhash),
-    ("object-agg", "[groups...] — object-buffer agg fallback boundary + spill", objectAgg),
-    ("exactness", "[dir] — exact vs banded A/B at sf0.1", exactness),
-    ("ab-prefilter", "[dir] [pairsShape] [cosdedupShape] — int8 candidate-prefilter on/off A/B", abPrefilter),
-    ("verify-shuffle", "[n|dir:<path>] [shape] [bucketcap] — string vs hash shingle keys in the jaccard verify", verifyShuffle),
-    ("topk-encoder", "[nKeys] [rowsPerKey] [k] — struct vs kryo bounded-top-k buffer encoding A/B", topkEncoder),
-    ("decontam-bloom", "[n] [evalTokens] — bloom prefilter vs broadcast/shuffle join in decontaminate", decontamBloom),
-    ("sim-bucketcap", "[n,...] [hotFrac] [cap] [full|caponly] [shape] — embedding-side bucket cap on the dense-dup corpus (shape default 8x10; MUST be corpus-matched or the cap empties the index)", simBucketcap),
     ("cc-chain", "[n...] — star-contraction rounds/wall on path graphs", ccChain),
-    ("skew-minhash", "[n] [hotFrac] — AQE skew-split evidence on a hot-bucket corpus", skewMinhash),
-    ("banded", "[dir] [shape] — banded pipeline stage decomposition", banded),
     ("crossover", "[n...] — exact↔banded crossover, clustered corpus", crossover),
     ("probe", "[n] [shape,...] [bits...] — multi-probe frontier (same-label)", probe),
     ("dedup-probe", "[n] [shape,...] [bits...] — multi-probe frontier (cos dedup)", dedupProbe),
     ("docs-crossover", "[n...] — MinHash-route crossover, Zipfian docs", docsCrossover),
-    ("profile-stages", "<query>... — per-stage wall/tasks/shuffle-bytes of one warmed run", profileStages))
+    ("plans", "<outDir> <suffix> [query...] — formatted physical plan per query", plans))
 
   def main(args: Array[String]): Unit = args.headOption.flatMap(
       name => subs.find(_._1 == name)) match {
@@ -528,8 +436,7 @@ object Harness {
     */
   private def profileStages(args: Array[String]): Unit = {
     import org.apache.spark.scheduler.{SparkListenerJobStart, SparkListenerStageCompleted}
-    val spark = Session.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "profile-stages")
+    val spark = session("profile-stages")
     spark.conf.set("graft.sums.exact", "false")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark.range(1000).count() // session warm
@@ -592,31 +499,6 @@ object Harness {
     spark.stop()
   }
 
-  /** Time arbitrary registered queries across scale factors — the
-    * per-operator scaling measurement behind SCALE.md's tables. Dirs come
-    * from SPARK_GRAFT_SF_DIRS (comma-separated, default sf0.01,sf0.1).
-    * Methodology matches Bench: noop sink, one warmup, min-of-3,
-    * plain-double sums.
-    */
-  private def timeQueries(args: Array[String]): Unit = {
-    val spark = Session.local(32, "time-queries")
-    spark.conf.set("graft.sums.exact", "false")
-    val dirs = sys.env.getOrElse("SPARK_GRAFT_SF_DIRS",
-      "/root/testdata/sf0.01,/root/testdata/sf0.1").split(",").toSeq
-    for (name <- args.toSeq; dir <- dirs) {
-      val fn = graft.SparkEntry.queries(name)
-      def run(): Double = {
-        val t0 = System.nanoTime()
-        noop(fn(spark, dir))
-        (System.nanoTime() - t0) / 1e9
-      }
-      run() // warmup (codegen compile)
-      val best = (1 to 3).map(_ => run()).min
-      println(f"SEGMENT $name%-26s ${dir.split('/').last}%-8s min=$best%.2fs")
-    }
-    spark.stop()
-  }
-
   /** Replicate the sf0.1 lineitem N× in memory (fresh orderkeys per copy
     * so join/group cardinalities scale too) and time the headline shapes
     * at 1×/2×/4×/8×. If a plan's time grows ~linearly (n log n for sort)
@@ -624,7 +506,7 @@ object Harness {
     * proxy for the 100 TB claim (SCALE.md round 2).
     */
   private def scale(args: Array[String]): Unit = {
-    val spark = Session.local(32, "profile-scale")
+    val spark = session("profile-scale")
     spark.conf.set("graft.sums.exact", "false")
     import spark.implicits._
     val dir = "/root/testdata/sf0.1"
@@ -657,577 +539,6 @@ object Harness {
     spark.stop()
   }
 
-  /** Decimal-exact vs double-sum Q1 cost (the `graft.sums.exact` price). */
-  private def q1(args: Array[String]): Unit = {
-    val spark = Session.local(32, "profile-q1")
-    import spark.implicits._
-    val dir = "/root/testdata/sf0.1"
-    def time[A](label: String)(f: => Unit): Unit = {
-      val t = Corpora.timed(1)(f)
-      println(f"SEGMENT $label%-20s $t%.2fs")
-    }
-    time("decimal q1") {
-      noop(graft.operators.Aggregates.q1PricingSummary(spark, dir))
-    }
-    time("double q1") {
-      noop(Tables.lineitem(spark, dir)
-        .filter($"l_shipdate" <= lit("1998-09-02").cast("timestamp"))
-        .groupBy($"l_returnflag", $"l_linestatus")
-        .agg(sum($"l_quantity"), sum($"l_extendedprice"),
-          sum($"l_extendedprice" * (lit(1.0) - $"l_discount")),
-          avg($"l_quantity"), count(lit(1)))
-        .orderBy($"l_returnflag", $"l_linestatus"))
-    }
-    time("scan only") {
-      noop(Tables.lineitem(spark, dir))
-    }
-    spark.stop()
-  }
-
-  /** A/B the 3-way join shapes (direct vs eager pre-agg). */
-  private def join3(args: Array[String]): Unit = {
-    val spark = Session.local(32, "profile-join3")
-    spark.conf.set("graft.sums.exact", "false")
-    import spark.implicits._
-    val dir = "/root/testdata/sf0.1"
-    def run(label: String)(f: => DataFrame): Unit = {
-      noop(f) // warm
-      val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); noop(f); (System.nanoTime() - t0) / 1e9
-      }
-      println(f"SEGMENT $label%-12s min=${times.min}%.2fs med=${times.sorted.apply(1)}%.2fs")
-    }
-    run("direct") {
-      Tables.customer(spark, dir)
-        .join(Tables.orders(spark, dir), $"c_custkey" === $"o_custkey")
-        .join(Tables.lineitem(spark, dir), $"o_orderkey" === $"l_orderkey")
-        .groupBy($"c_mktsegment")
-        .agg(count(lit(1)).as("n_lines"),
-          sum($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("revenue"))
-        .orderBy($"c_mktsegment")
-    }
-    run("eager") {
-      val perOrder = Tables.lineitem(spark, dir)
-        .groupBy($"l_orderkey")
-        .agg(count(lit(1)).as("nl"),
-          sum($"l_extendedprice" * (lit(1.0) - $"l_discount")).as("rev"))
-      Tables.customer(spark, dir)
-        .join(Tables.orders(spark, dir), $"c_custkey" === $"o_custkey")
-        .join(perOrder, $"o_orderkey" === $"l_orderkey")
-        .groupBy($"c_mktsegment")
-        .agg(sum($"nl").as("n_lines"), sum($"rev").as("revenue"))
-        .orderBy($"c_mktsegment")
-    }
-    spark.stop()
-  }
-
-  /** Segment timing for the COMPOSED minhash pipeline stages (historical:
-    * the production route now computes signatures in-scan via the
-    * `minhash_sig` kernel — this prices what that kernel deleted). */
-  private def minhash(args: Array[String]): Unit = {
-    val spark = Session.local(32, "profile-minhash")
-    import spark.implicits._
-    val dir = "/root/testdata/sf0.1"
-    def time[A](label: String)(f: => A): A = {
-      f // warm
-      val t0 = System.nanoTime(); val r = f
-      println(f"SEGMENT $label%-30s ${(System.nanoTime() - t0) / 1e9}%.2fs"); r
-    }
-    spark.range(1000).count()
-    time("full run") {
-      noop(DedupOps.minhashLsh(spark, dir))
-    }
-    val docs = Tables.documents(spark, dir)
-    time("scan documents")(noop(docs))
-    val sh = docs
-      .select($"doc_id", split(regexp_replace(trim(lower(col("text"))), "\\s+", " "), " ").as("toks"))
-      .select($"doc_id", explode(transform(
-        sequence(lit(1), greatest(size($"toks") - lit(2), lit(1))),
-        i => concat_ws(" ", slice($"toks", i, lit(3))))).as("shingle"))
-    time("explode shingles")(noop(sh))
-    val aggs = (0 until 16).map { i =>
-      min(xxhash64(concat(lit(s"$i|"), col("shingle")))).as(s"mh_$i")
-    }
-    val sigs = sh.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-    time("signatures groupBy")(noop(sigs))
-    val bandCols = (0 until 8).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64((0 until 2).map(r => col(s"mh_${b * 2 + r}")): _*).as("bh"))
-    }
-    val candidates = sigs
-      .select($"doc_id", explode(array(bandCols: _*)).as("bb"))
-      .groupBy($"bb").agg(collect_set($"doc_id").as("docs"))
-      .filter(size($"docs") > 1)
-      .select(explode($"docs").as("d1"), $"docs")
-      .select($"d1", explode($"docs").as("d2"))
-      .filter($"d1" < $"d2")
-      .distinct()
-    time("candidates")(noop(candidates))
-    spark.stop()
-  }
-
-  /** ObjectHashAggregate fallback-boundary measurement (round 8): the
-    * round-7 SortAggregate sweep ADJUDICATED the engine's remaining
-    * object-buffer aggregations (bounded-heap top-k, percentile sketches)
-    * as scale-safe — "their sort-based fallback beyond the in-memory key
-    * threshold is the memory-safety contract" — but with an argument, not
-    * a number. This prices the argument: the same aggregation shapes as
-    * `agg_topk_per_key` / `agg_percentiles_sketch`, run at 250k–1M GROUPS
-    * (the gate queries group by 3-key enums; the fallback only engages
-    * past `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` =
-    * 128 distinct keys per partition), reporting wall time, throughput,
-    * and actual spill bytes from task metrics. A flat rows/s across group
-    * counts + zero-or-bounded spill = no cliff. A primitive-buffer
-    * HashAggregate control prices the shuffle + scan both paths share.
-    */
-  private def objectAgg(args: Array[String]): Unit = {
-    val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq
-      else Seq(250000, 500000, 1000000)
-    val rowsPerGroup = 8
-    val spark = Session.local(32, "profile-object-agg")
-    spark.conf.set("graft.sums.exact", "false")
-    import spark.implicits._
-    // spill accounting straight from task metrics — the only honest
-    // source: timing alone can't distinguish "slower because sorting"
-    // from "slower because spilling to /tmp"
-    val memSpill = new AtomicLong; val diskSpill = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          memSpill.addAndGet(m.memoryBytesSpilled)
-          diskSpill.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
-    def timedWithSpill(f: => Unit): (Double, Long, Long) = {
-      f // warm: codegen + shuffle-file setup out of the measurement
-      memSpill.set(0); diskSpill.set(0)
-      val t0 = System.nanoTime(); f
-      ((System.nanoTime() - t0) / 1e9, memSpill.get, diskSpill.get)
-    }
-    for (g <- sizes) {
-      val rows = g.toLong * rowsPerGroup
-      // deterministic synthetic: group key cycles so every group gets
-      // exactly rowsPerGroup members; the value is a cheap integer mix —
-      // id*2654435761 mod 1e6 — spread enough to exercise heap/sketch
-      // ordering without a row-level RNG
-      val df: DataFrame = spark.range(rows)
-        .select(($"id" % g).as("k"), $"id".as("rid"),
-          (($"id" * 2654435761L) % 1000000L).cast("double").as("v"))
-      val topk = org.apache.spark.sql.functions.udaf(new graft.functions.TopKAgg(3))
-      val (tTop, msTop, dsTop) = timedWithSpill {
-        noop(df.groupBy($"k").agg(topk($"v", $"rid").as("top")))
-      }
-      val (tPct, msPct, dsPct) = timedWithSpill {
-        // deployment accuracy (10000), not the gate's exactness-forcing 1e6
-        noop(df.groupBy($"k").agg(
-          expr("percentile_approx(v, 0.5, 10000)").as("p50"),
-          expr("percentile_approx(v, 0.95, 10000)").as("p95")))
-      }
-      val (tCtl, msCtl, dsCtl) = timedWithSpill {
-        noop(df.groupBy($"k").agg(sum($"v").as("s"), count(lit(1)).as("n")))
-      }
-      def mb(x: Long): String = f"${x / 1048576.0}%.0fMB"
-      println(f"OBJAGG groups=$g%8d rows=$rows%9d " +
-        f"topk=$tTop%6.2fs(${rows / tTop / 1e6}%5.1fM rows/s, spill mem=${mb(msTop)} disk=${mb(dsTop)}) " +
-        f"pctl=$tPct%6.2fs(spill mem=${mb(msPct)} disk=${mb(dsPct)}) " +
-        f"control=$tCtl%6.2fs(spill mem=${mb(msCtl)} disk=${mb(dsCtl)})")
-    }
-    spark.stop()
-  }
-
-  /** A/B the `graft.sim.exact` knob — exact all-pairs baselines vs the
-    * banded-LSH candidate paths — on the sf0.1 tables (2000 vectors, 5000
-    * documents). */
-  private def exactness(args: Array[String]): Unit = {
-    val spark = Session.local(32, "profile-exactness")
-    val dir = args.headOption.getOrElse(
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val queries = Seq[(String, () => DataFrame)](
-      "pairs_threshold" -> (() => SimilarityOps.pairsAboveThreshold(spark, dir)),
-      "nearest_same_label" -> (() => SimilarityOps.nearestSameLabel(spark, dir)),
-      "embedding_cosine" -> (() => DedupOps.embeddingCosineDedup(spark, dir)),
-      "ngram_jaccard" -> (() => DedupOps.ngramJaccard(spark, dir)))
-    for ((label, f) <- queries; exact <- Seq(true, false)) {
-      spark.conf.set("graft.sim.exact", exact.toString)
-      noop(f()) // warm
-      val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); noop(f()); (System.nanoTime() - t0) / 1e9
-      }
-      val mode = if (exact) "exact" else "banded"
-      println(f"SEGMENT $label%-20s $mode%-7s min=${times.min}%.2fs med=${times.sorted.apply(1)}%.2fs")
-    }
-    spark.stop()
-  }
-
-  /** A/B the int8 candidate prefilter (round 10): the two banded threshold
-    * routes with `graft.sim.prefilter` off vs on, plus the candidate-count
-    * evidence — how many of the Θ(Σ|bucket|²) pairs the provable
-    * [[graft.expr.Int8Keep]] bound kills before the pair distinct and the
-    * float verify joins ever see them. Same methodology as the bench's
-    * banded block (noop sink, warmup, min-of-5).
-    */
-  private def abPrefilter(args: Array[String]): Unit = {
-    val spark = Session.local(32, "ab-prefilter")
-    // `boiler:<n>` generates the size-heterogeneous boilerplate corpus
-    // (docs only) instead of pointing at an SF dir — the minhash
-    // prefilter's realistic stress shape
-    val dir = args.headOption match {
-      case Some(s) if s.startsWith("boiler:") =>
-        Corpora.generateBoilerplateDocs(spark, s.stripPrefix("boiler:").toInt)
-      case Some(s) => s
-      case None => sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    }
-    val hasEmbeddings =
-      java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/embeddings.parquet"))
-    spark.conf.set("graft.sim.exact", "false")
-    // optional shape override (args 2/3: pairs shape, cosdedup shape) — the
-    // gate defaults are right for the gate tables; a crossover corpus wants
-    // its corpus-matched shape (the prefilter's worst case is a dup-heavy
-    // corpus where most candidates SURVIVE, and that case only exists at a
-    // clustered corpus + matched shape)
-    def shapeOf(i: Int, defT: Int, defP: Int): (Int, Int) =
-      args.lift(i).map(_.toLowerCase.split("x").map(_.trim.toInt) match {
-        case Array(t, p) => (t, p)
-        case _ => sys.error(s"shape arg must be <tables>x<planes>, got '${args(i)}'")
-      }).getOrElse((defT, defP))
-    val (pT, pP) = shapeOf(1, 16, 2)
-    val (cT, cP) = shapeOf(2, 8, 4)
-    spark.conf.set("graft.sim.bands.pairs", s"${pT}x$pP")
-    spark.conf.set("graft.sim.bands.cosdedup", s"${cT}x$cP")
-    // optional arg 4: minhash band shape (e.g. 16x1 — the recall-total
-    // 1-row shape where banding admits low-jaccard size-mismatched pairs
-    // and the size-ratio bound has real mass to kill; at the gate's 8x2,
-    // collision probability ~ j^2 already suppresses them)
-    args.lift(3).foreach(s => spark.conf.set("graft.sim.bands.minhash", s))
-    // candidate-mass evidence first (cheap counts, not timed)
-    for ((label, t, p, theta) <- Seq(
-        (s"pairs@0.4 ${pT}x$pP", pT, pP, SimilarityOps.PairsThreshold),
-        (s"cosdedup@0.9 ${cT}x$cP", cT, cP, DedupOps.CosDedupThreshold))
-        if hasEmbeddings) {
-      val all = SimilarityOps.lshCandidateIds(spark, dir, t, p).count()
-      val kept = SimilarityOps.lshCandidateIds(spark, dir, t, p,
-        prefilterTheta = Some(theta)).count()
-      println(f"ABPREFILTER $label%-18s candidates=$all kept=$kept " +
-        f"killed=${1.0 - kept.toDouble / math.max(all, 1)}%.4f")
-    }
-    // minhash-family candidate mass (round 11: the size-ratio bound rides
-    // the same knob) — prefilter off vs on through minhashCandidatesPlan
-    locally {
-      spark.conf.set("graft.sim.prefilter", "false")
-      val all = DedupOps.minhashCandidatesPlan(spark, dir).count()
-      spark.conf.set("graft.sim.prefilter", "true")
-      val kept = DedupOps.minhashCandidatesPlan(spark, dir).count()
-      println(f"ABPREFILTER minhash@0.5 size-ratio candidates=$all kept=$kept " +
-        f"killed=${1.0 - kept.toDouble / math.max(all, 1)}%.4f")
-    }
-    val queries = (if (hasEmbeddings) Seq[(String, () => DataFrame)](
-      "sim_pairs_threshold" -> (() => SimilarityOps.pairsAboveThreshold(spark, dir)),
-      "dedup_embedding_cosine" -> (() => DedupOps.embeddingCosineDedup(spark, dir)))
-    else Nil) ++ Seq[(String, () => DataFrame)](
-      "dedup_ngram_jaccard" -> (() => DedupOps.ngramJaccard(spark, dir)),
-      "dedup_minhash_lsh" -> (() => DedupOps.minhashLsh(spark, dir)))
-    for ((label, f) <- queries; pre <- Seq(false, true)) {
-      spark.conf.set("graft.sim.prefilter", pre.toString)
-      noop(f()) // warm
-      val times = (1 to 5).map { _ =>
-        val t0 = System.nanoTime(); noop(f()); (System.nanoTime() - t0) / 1e9
-      }
-      println(f"ABPREFILTER $label%-22s prefilter=$pre%-5s " +
-        f"min=${times.min}%.2fs med=${times.sorted.apply(2)}%.2fs")
-    }
-    spark.stop()
-  }
-
-  /** Round 12 (r11 verdict #2): MEASURE the verify stage's shingle-string
-    * shuffle, then the hash-keyed cut. The survivor verify in
-    * `jaccardStats` re-derives candidate shingle sets and shuffles them
-    * three times (slice distinct, sizes groupBy, common join) — with
-    * string keys those rows carry ~15–30 B payloads; `graft.dedup
-    * .hashverify` swaps in the 8-byte xxhash64 the kernels already compute
-    * per shingle. A/Bs the knob on the size-heterogeneous boilerplate
-    * corpus over the banded path, reporting per-mode wall time and the
-    * timed pass's total shuffle read/write bytes from task metrics (the
-    * honest source — a wall-only A/B can't attribute the win to bytes).
-    * The shared candidate-generation stage is timed separately so the
-    * verify-only share is explicit.
-    */
-  private def verifyShuffle(args: Array[String]): Unit = {
-    val spark = Session.local(32, "verify-shuffle")
-    // arg 0: boilerplate doc count, or "dir:<path>" to point at existing
-    // tables (e.g. the sf0.1 gate corpus)
-    val dir = args.headOption match {
-      case Some(s) if s.startsWith("dir:") => s.stripPrefix("dir:")
-      case o => Corpora.generateBoilerplateDocs(spark, o.map(_.toInt).getOrElse(20000))
-    }
-    val n = dir
-    spark.conf.set("graft.sim.exact", "false")
-    spark.conf.set("graft.sim.prefilter", "true")
-    args.lift(1).foreach(s => spark.conf.set("graft.sim.bands.minhash", s))
-    // arg 2: bucket cap (graft.dedup.bucketcap) — the quadratic-mass dial
-    args.lift(2).foreach(c => spark.conf.set("graft.dedup.bucketcap", c))
-    val shape = spark.conf.get("graft.sim.bands.minhash", "8x2(default)")
-    val cap = spark.conf.get("graft.dedup.bucketcap", "off")
-    val meter = new ShuffleMeter(spark)
-    import ShuffleMeter.mb
-    import meter.measured
-    // the count doubles as the warm pass (same stages + a cheap agg)
-    val nCand = DedupOps.minhashCandidatesPlan(spark, dir).count()
-    val (tCand, rCand, wCand) = measured(
-      noop(DedupOps.minhashCandidatesPlan(spark, dir)), warm = false)
-    println(f"VERIFYSHUF corpus=$n shape=$shape cap=$cap candidates=$nCand " +
-      f"candidates-only min=$tCand%.2fs shuffle read=${mb(rCand)} write=${mb(wCand)}")
-    for (hv <- Seq(false, true)) {
-      spark.conf.set("graft.dedup.hashverify", hv.toString)
-      val nPairs = DedupOps.ngramJaccard(spark, dir).count()
-      val (t, r, w) = measured(noop(DedupOps.ngramJaccard(spark, dir)), warm = false)
-      val mode = if (hv) "hash-keys" else "string-keys"
-      println(f"VERIFYSHUF corpus=$n shape=$shape cap=$cap full[$mode%-11s] " +
-        f"min=$t%.2fs verify-share=${t - tCand}%.2fs verifiedPairs=$nPairs " +
-        f"shuffle read=${mb(r)} write=${mb(w)}")
-    }
-    spark.stop()
-  }
-
-  /** Round 13 (bench Kryo sentinel, SCALE.md): A/B the bounded-top-k
-    * BUFFER encoding — product struct vs `Encoders.kryo` — on a synthetic
-    * many-group aggregation whose shuffle is almost entirely partial
-    * `TopKBuf` rows (nKeys·partitions tiny heaps). The swap to struct
-    * encoders was motivated by correctness-under-deployment (an
-    * opens-less JVM cannot kryo-serialize ANY Scala object); this
-    * measures the byte/wall side so the SCALE.md claim is a figure, not
-    * a guess. The kryo leg lives HERE as a harness-only subclass —
-    * production aggregators inherit the struct encoder from
-    * [[graft.functions.BoundedTopK]] and cannot silently pick kryo.
-    * args: [nKeys] [rowsPerKey] [k]
-    */
-  private def topkEncoder(args: Array[String]): Unit = {
-    val spark = Session.local(32, "topk-encoder")
-    import spark.implicits._
-    val nKeys = args.lift(0).map(_.toInt).getOrElse(100000)
-    val rowsPerKey = args.lift(1).map(_.toInt).getOrElse(20)
-    val k = args.lift(2).map(_.toInt).getOrElse(3)
-    // deterministic synthetic input, materialized once so both legs
-    // aggregate identical cached blocks instead of re-running range codegen
-    val df = spark.range(nKeys.toLong * rowsPerKey).select(
-      pmod($"id", lit(nKeys)).as("key"),
-      (pmod(hash($"id"), lit(1000000)).cast("double") / 1e6).as("score"),
-      $"id".as("c_id")).localCheckpoint(true)
-    val meter = new ShuffleMeter(spark)
-    import ShuffleMeter.mb
-    val legs = Seq(
-      "struct" -> udaf(new graft.functions.TopKAgg(k)),
-      "kryo" -> udaf(new KryoTopKAgg(k)))
-    for ((label, agg) <- legs) {
-      val out = df.groupBy($"key").agg(agg($"score", $"c_id").as("top"))
-      val (t, r, w) = meter.measured(noop(out))
-      println(f"TOPKENC nKeys=$nKeys rowsPerKey=$rowsPerKey k=$k buf=$label%-6s " +
-        f"min=$t%.2fs shuffle read=${mb(r)} write=${mb(w)}")
-    }
-    spark.stop()
-  }
-
-  /** Round 13 (r12 verdict #2): measure the embedding-side quadratic
-    * bucket and the `graft.sim.bucketcap.cosdedup` dial on the dense-duplicate
-    * corpus ([[Corpora.generateDenseDupVectors]]). For each size: the
-    * UNCAPPED banded candidate count (total + the slice among the planted
-    * GENUINE clusters — the recall mass the cap must not cost), the
-    * capped counts, and the capped `dedup_embedding_cosine` wall. Arg 3
-    * selects a mode: `full` additionally runs the uncapped full dedup
-    * (float-verify over the quadratic mass — the JVM-killing leg at
-    * scale, by the minhash precedent); `caponly` SKIPS the uncapped
-    * count leg entirely (past ~100k vectors its pre-distinct shuffle is
-    * quadratic in scratch DISK — measured fatal at 200k on a ~78 GB
-    * disk) and reports genuineKept against
-    * [[Corpora.plantedGenuinePairs]] instead — an absolute recall bound
-    * that includes banding loss. Arg 4 is the band shape. In the default
-    * A/B, genuine-slice equality capped ≡ uncapped is the
-    * zero-recall-loss evidence: genuine clusters live in ~50-vector
-    * buckets far below any sane cap.
-    */
-  private def simBucketcap(args: Array[String]): Unit = {
-    val spark = Session.local(32, "sim-bucketcap")
-    import spark.implicits._
-    val sizes = args.headOption.map(_.split(",").map(_.trim.toInt).toSeq)
-      .getOrElse(Seq(20000, 50000))
-    val hotFrac = args.lift(1).map(_.toDouble).getOrElse(0.2)
-    val cap = args.lift(2).map(_.toInt).getOrElse(512)
-    // `caponly` (arg 3): skip the uncapped count leg entirely. Past
-    // ~100k vectors the uncapped candidate mass is quadratic in DISK as
-    // well as time — measured 2026-08-15: at 200k (hot 40k) the
-    // pre-distinct shuffle (~8B pairs across 10 tables) filled this
-    // box's ~78 GB scratch after 41 min and killed the job with "No
-    // space left on device". genuineKept is then reported against
-    // Corpora.plantedGenuinePairs instead of the unmeasurable uncapped
-    // genuine slice — an absolute recall bound (banding loss included)
-    // rather than the cap-only relative one. A typo'd mode must fail
-    // HERE, not fall through to the disk-filling uncapped leg.
-    val mode = args.lift(3)
-    require(mode.forall(Set("full", "caponly")),
-      s"arg 3 must be 'full' or 'caponly', got '${mode.get}'")
-    val runFull = mode.contains("full")
-    val capOnly = mode.contains("caponly")
-    // CORPUS-MATCHED shape (arg 4, default 8x10 = 1024 buckets/table):
-    // the cap presumes bucket count ≫ corpus/cap — at the gate's 8×4
-    // there are only 2⁴ buckets per table, so past ~cap×16 vectors EVERY
-    // bucket is over-cap and the index empties (measured: candidates=0
-    // at 20k docs, cap 512, 8×4). That is SCALE.md round 6's "bucket
-    // count must exceed cluster count" rule biting the cap dial too;
-    // BandTuner.suggest picks the matched shape a deployment would run.
-    val shape = args.lift(4).getOrElse("8x10")
-    val (tables, planes) = (shape.split("x")(0).toInt, shape.split("x")(1).toInt)
-    spark.conf.set("graft.sim.exact", "false")
-    spark.conf.set("graft.sim.bands.cosdedup", shape)
-    for (n <- sizes) {
-      val dir = Corpora.generateDenseDupVectors(spark, n, hotFrac)
-      val (gLo, gHi) = ((n * hotFrac).toLong, (n * hotFrac).toLong + (n * Corpora.GenuineFrac).toLong)
-      // a candidate pair is PLANTED iff both ids are genuine AND sit in
-      // the same generator cluster (consecutive-id modulus — the
-      // generateDenseDupVectors layout). The caponly recall bound divides
-      // by plantedGenuinePairs, so its numerator must count the same
-      // population: the previous genuine-RANGE numerator also counted
-      // cross-cluster band collisions, letting the printed "absolute
-      // recall bound" exceed 1.0 (round-14 advice #2). Same-cluster
-      // candidate pairs are a subset of planted pairs, so the fixed
-      // bound is ≤ 1.0 by construction.
-      val nClusters = math.max(1, (n * Corpora.GenuineFrac).toInt / Corpora.ClusterSize)
-      def counts(): (Long, Long, Long) = {
-        // the cosdedup route's exact candidate shape (θ=0.9 int8
-        // prefilter), counted without the float verify so the uncapped
-        // quadratic mass is measurable without the JVM-killing join
-        val c = SimilarityOps.lshCandidateIds(spark, dir, nTables = tables,
-          planesPerTable = planes, prefilterTheta = Some(DedupOps.CosDedupThreshold),
-          capKey = "cosdedup")
-        val genuine = $"v1" >= gLo && $"v1" < gHi && $"v2" >= gLo && $"v2" < gHi
-        val r = c.agg(count(lit(1)), count(when(genuine, 1)),
-          count(when(genuine && $"v1" % nClusters === $"v2" % nClusters, 1))).head
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }
-      def dedupWall(label: String): Unit = {
-        val t = Corpora.timed(2)(noop(DedupOps.embeddingCosineDedup(spark, dir)))
-        println(f"SIMCAP n=$n%7d hot=${(n * hotFrac).toInt}%6d shape=$shape $label dedup wall min=$t%.2fs")
-      }
-      spark.conf.unset("graft.sim.bucketcap.cosdedup")
-      val genU: Long = if (capOnly) {
-        val denom = Corpora.plantedGenuinePairs(n)
-        println(f"SIMCAP n=$n%7d hot=${(n * hotFrac).toInt}%6d shape=$shape cap=off SKIPPED (caponly); planted genuine pairs=$denom%,9d")
-        denom
-      } else {
-        val (allU, g, _) = counts()
-        println(f"SIMCAP n=$n%7d hot=${(n * hotFrac).toInt}%6d shape=$shape cap=off candidates=$allU%,12d genuine=$g%,9d")
-        if (runFull) dedupWall("cap=off")
-        g
-      }
-      spark.conf.set("graft.sim.bucketcap.cosdedup", cap.toString)
-      val (allC, genC, plantedC) = counts()
-      // caponly: absolute bound, planted numerator over planted denominator
-      // (≤ 1.0); full A/B: relative like-for-like, capped genuine-range
-      // collisions over uncapped genuine-range collisions
-      val kept = if (capOnly) plantedC else genC
-      println(f"SIMCAP n=$n%7d hot=${(n * hotFrac).toInt}%6d shape=$shape cap=$cap candidates=$allC%,12d genuine=$genC%,9d " +
-        f"genuineKept=${if (genU == 0) 1.0 else kept.toDouble / genU}%.4f${if (capOnly) " (planted/planted)" else ""}")
-      dedupWall(s"cap=$cap")
-      spark.conf.unset("graft.sim.bucketcap.cosdedup")
-    }
-    spark.stop()
-  }
-
-  /** Round 12 (r11 verdict #3): A/B the decontamination bloom prefilter in
-    * the regime it exists for. Three configs on the decontam stress corpus
-    * (large eval docs, ~100% corpus-side miss rate off the planted
-    * windows):
-    *  1. broadcast join, no bloom — the gate default; misses die in the
-    *     in-stage broadcast probe, nothing to fix;
-    *  2. FORCED shuffle join (autoBroadcastJoinThreshold=-1, emulating an
-    *     eval-gram set past the broadcast budget), no bloom — the
-    *     pathology: the full corpus shingle stream crosses the exchange;
-    *  3. forced shuffle + bloom — the outgrow path: the scan-stage bloom
-    *     kills misses first, so only ~matches+fpp reach the exchange.
-    * Wall + the timed pass's shuffle bytes from task metrics, so the claim
-    * "the bloom cuts the shuffle, not just the clock" is measured.
-    */
-  private def decontamBloom(args: Array[String]): Unit = {
-    val spark = Session.local(32, "decontam-bloom")
-    val n = args.lift(0).map(_.toInt).getOrElse(50000)
-    val evalTokens = args.lift(1).map(_.toInt).getOrElse(200000)
-    val dir = Corpora.generateDecontamDocs(spark, n, evalTokens)
-    val meter = new ShuffleMeter(spark)
-    import ShuffleMeter.mb
-    import meter.measured
-    val contaminated = TextOps.decontaminate(spark, dir)
-      .filter(org.apache.spark.sql.functions.col("contaminated")).count()
-    println(s"DECONTAM n=$n evalTokens=$evalTokens plantedContaminated=$contaminated")
-    // the A/B is meaningless on a corpus with no (or partial) planted
-    // contamination — assert the full schedule was both planted and
-    // detected (disjoint vocabularies make false positives impossible)
-    val expected = (5L until (n + 5L)).count(_ % 20 == 5)
-    assert(contaminated == expected,
-      s"planted $expected contaminated docs, detected $contaminated — generator or detector broke")
-    // the naive outgrown design the bloom path replaces: decontaminate's
-    // exact shape MINUS the broadcast hint and minus the bloom — the raw
-    // corpus shingle stream crosses the exchange into a shuffle join.
-    // (Config 1's explicit broadcast() hint can't degrade to this shape:
-    // past the broadcast budget it kills the driver outright, the r11
-    // pair-set-broadcast pathology — which is WHY the outgrow path is a
-    // separate knob and not "let AQE decide".)
-    def naiveShuffleDecontam(): DataFrame = {
-      import spark.implicits._
-      val docs = Tables.documents(spark, dir)
-      val evalGrams = DedupOps.shingledOf(docs.filter($"doc_id" < 5))
-        .select($"shingle").distinct()
-      val overlaps = DedupOps.shingledOf(docs.filter($"doc_id" >= 5))
-        .join(evalGrams, Seq("shingle")).distinct()
-        .groupBy($"doc_id").agg(count(lit(1)).as("n_overlap"))
-      docs.filter($"doc_id" >= 5).select($"doc_id")
-        .join(overlaps, Seq("doc_id"), "left")
-        .select($"doc_id", coalesce($"n_overlap", lit(0L)).as("n_overlap"))
-        .withColumn("contaminated", $"n_overlap" >= 3)
-        .orderBy($"doc_id")
-    }
-    for ((label, noBroadcast, bloom) <- Seq(
-        ("broadcast hint, no bloom (gate default)  ", false, false),
-        ("hint-free shuffle join, no bloom (naive) ", true, false),
-        ("hint-free shuffle join + bloom (outgrown)", true, true))) {
-      val thr = if (noBroadcast) "-1" else "10485760"
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", thr)
-      spark.conf.set("graft.text.decontam.bloom", bloom.toString)
-      val q: () => DataFrame =
-        if (noBroadcast && !bloom) () => naiveShuffleDecontam()
-        else () => TextOps.decontaminate(spark, dir)
-      val (t, r, w) = measured(noop(q()))
-      println(f"DECONTAM $label min=$t%.2fs shuffle read=${mb(r)} write=${mb(w)}")
-    }
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    spark.conf.unset("graft.text.decontam.bloom")
-    spark.stop()
-  }
-
-  /** Round 11 (r10 verdict #2): MEASURE the hot-bucket skew claim the
-    * round-10 minhash self-join rationale asserted ("AQE's skew handling
-    * can split a hot bucket"). Generates a corpus where `hotFrac` of the
-    * docs are IDENTICAL near-empty documents — one shared signature, so
-    * every band contributes one degenerate (band,bucket) key holding
-    * hotFrac·n rows — then runs the candidate plan with
-    * `spark.sql.adaptive.skewJoin.enabled` off vs on and reports wall
-    * time, the task-duration distribution of the run, the candidate count
-    * (must be identical — the split is physical, not semantic), and
-    * whether the final adaptive plan actually carries skew-split
-    * AQEShuffleRead nodes.
-    *
-    * Threshold honesty: AQE detects skew by MAP-OUTPUT PARTITION BYTES
-    * (factor × median AND an absolute floor), not by join-output rows —
-    * and the quadratic pair blowup is an OUTPUT property. The two meet
-    * because a bucket degenerate enough to matter holds many DOCS (input
-    * rows ∝ docs in the bucket, output pairs ∝ docs²): by the time the
-    * quadratic side is lethal, the input side is far past any sane
-    * threshold. The local corpus is ~10^4× smaller than production, so the
-    * demo scales the byte thresholds down proportionally (the 256 MB
-    * default exists for clusters); the MECHANISM — detection, split,
-    * replicate-other-side, identical result — is what's being measured.
-    */
   /** Round 12: measure the star-contraction round count and wall on PATH
     * graphs — the adversarial shape for label propagation (diameter = n−1,
     * which the old 25-round min-label loop silently fractured past n=26).
@@ -1237,7 +548,7 @@ object Harness {
     * two id-width shuffles) is a measured line, not a citation.
     */
   private def ccChain(args: Array[String]): Unit = {
-    val spark = Session.local(32, "cc-chain")
+    val spark = session("cc-chain")
     import spark.implicits._
     val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq
       else Seq(1000, 10000, 100000, 1000000)
@@ -1245,185 +556,21 @@ object Harness {
     // checkpoint, count, except's two); the r13 fold targets 1/round +
     // a final-round equality probe. Counted over the contraction only
     // (the label-count job below runs outside the window).
-    val jobs = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val desc = Option(j.properties)
-          .map(_.getProperty("spark.job.description")).orNull
-        // BusDrain sentinels are excluded from the job count by their
-        // description prefix; everything else in the window counts
-        if (desc == null || !desc.startsWith(BusDrain.SentinelPrefix))
-          jobs.incrementAndGet()
-      }
-    })
-    // DETERMINISTIC listener drain (round 15, r14 advice #5 — the old
-    // Thread.sleep(300) could undercount jobs/round on a loaded box),
-    // consolidated onto the shared BusDrain (round-16 review #6: two
-    // copies of the sentinel protocol drifted apart within one file).
-    // BusDrain latches on the sentinel's JobEnd, which is posted after
-    // its JobStart — so once drain() returns, every JobStart posted
-    // before it has reached the counting listener above (FIFO per
-    // event across all listeners in the shared queue).
-    def drainJobStarts(): Unit = BusDrain.drain(spark)
     for (n <- sizes) {
       val nodes = spark.range(n).select($"id".as("doc_id"))
       val pairs = spark.range(n - 1).select($"id".as("d1"), ($"id" + 1).as("d2"))
-      // drain BEFORE capturing j0 too: the previous iteration's
-      // label-count verification job posts its JobStart events after that
-      // iteration's drain, and under bus lag they would otherwise land
-      // inside THIS window and inflate its jobs/round (round-15 review)
-      drainJobStarts()
-      val t0 = System.nanoTime()
-      val j0 = jobs.get()
-      val (labels, rounds) = DedupOps.starComponents(nodes, pairs)
-      // wall covers the contraction only — captured BEFORE the listener
-      // drain and the label-count verification job (the round-13 review
-      // caught both riding inside the reported wall; the recorded
-      // r12-vs-r13 A/B carried the same constant on both arms, so its
-      // ratios stand, but absolute walls read ~0.3 s + one count high)
-      val wall = (System.nanoTime() - t0) / 1e9
-      drainJobStarts()
-      val nJobs = jobs.get() - j0
+      val ((labels, rounds, wall), nJobs) = BusDrain.countJobs(spark) {
+        val t0 = System.nanoTime()
+        val (l, r) = DedupOps.starComponents(nodes, pairs)
+        // wall covers the contraction only, not the closing drain or the
+        // label-count verification job below
+        (l, r, (System.nanoTime() - t0) / 1e9)
+      }
       val distinctLabels = labels.select($"label").distinct().count()
       println(f"CCCHAIN n=$n%8d diameter=${n - 1}%8d rounds=$rounds%3d " +
         f"components=$distinctLabels jobs=$nJobs%3d (${nJobs.toDouble / math.max(rounds, 1)}%.1f/round) " +
         f"wall=$wall%.2fs")
       assert(distinctLabels == 1, s"path graph fractured: $distinctLabels components")
-    }
-    spark.stop()
-  }
-
-  private def skewMinhash(args: Array[String]): Unit = {
-    val spark = Session.local(32, "skew-minhash")
-    import spark.implicits._
-    val n = args.lift(0).map(_.toInt).getOrElse(20000)
-    val hotFrac = args.lift(1).map(_.toDouble).getOrElse(0.2)
-    val nHot = (n * hotFrac).toInt
-    // hot docs: identical 2-token text = one shared 1-shingle signature;
-    // background: 60 random tokens over a 50k vocab — essentially unique
-    // buckets. Locals only in the closure (serialization).
-    val docs = spark.range(n).map { i =>
-      if (i < nHot) (i, "w0 w1")
-      else {
-        val r = new scala.util.Random(31L * i + 7)
-        (i, Array.fill(60)("w" + r.nextInt(50000)).mkString(" "))
-      }
-    }.toDF("doc_id", "text")
-    val dir = s"/tmp/graft_skew/n${n}_hot${math.round(hotFrac * 100)}"
-    docs.repartition(32).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    // scaled-down skew thresholds (see scaladoc): the hot partition here
-    // is tens of KB, not hundreds of MB
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "32KB")
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-    // cluster-true partition count: detection compares the hot key against
-    // the MEDIAN partition, and a production job runs thousands of shuffle
-    // partitions — at local[32]'s default 32 the background mass is so
-    // thick per partition that a 20% hot bucket is only ~1.8× median
-    // (measured; detection needs factor×median). 200 thins the background
-    // ~6×, the local stand-in for the real ratio.
-    spark.conf.set("spark.sql.shuffle.partitions", "200")
-    val durations = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    // exclude the BusDrain sentinels' own tasks from the med/max figures:
-    // the post-measure drain's sentinel TaskEnd lands before the latch
-    // releases (that ordering is the drain's guarantee), so without this
-    // it would ride inside the measured run's duration sample
-    val sentinelStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val d = Option(j.properties)
-          .map(_.getProperty("spark.job.description")).orNull
-        if (d != null && d.startsWith(BusDrain.SentinelPrefix))
-          j.stageIds.foreach(id => sentinelStages.add(id))
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null && !sentinelStages.contains(t.stageId))
-          durations.add(t.taskMetrics.executorRunTime)
-    })
-    // listener events are delivered on the async bus; drain it before
-    // clearing (warm-run stragglers) and before reading (the measured
-    // run's own straggler IS the evidence) — without the drain, the
-    // med/max figures can silently miss the hot-bucket task. Sentinel
-    // tasks are excluded above by stage id, so the post-measure drain
-    // cannot leak its own task into the sample it flushes.
-    for (skewOn <- Seq(false, true)) {
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", skewOn.toString)
-      val df = DedupOps.minhashCandidatesPlan(spark, dir)
-      df.queryExecution.toRdd.count() // warm (codegen, shuffle files)
-      BusDrain.drain(spark)
-      durations.clear()
-      val df2 = DedupOps.minhashCandidatesPlan(spark, dir)
-      val t0 = System.nanoTime()
-      val cnt = df2.queryExecution.toRdd.count()
-      val secs = (System.nanoTime() - t0) / 1e9
-      BusDrain.drain(spark)
-      val plan = df2.queryExecution.executedPlan.toString
-      val skewReads = plan.linesIterator.count(l => l.contains("AQEShuffleRead") && l.contains("skew"))
-      val ds = durations.toArray(Array.empty[java.lang.Long]).map(_.longValue).sorted
-      val med = if (ds.nonEmpty) ds(ds.length / 2) else 0L
-      val mx = if (ds.nonEmpty) ds.last else 0L
-      println(f"SKEWMINHASH n=$n hot=$nHot skewJoin=$skewOn%-5s wall=$secs%6.2fs " +
-        f"candidates=$cnt taskRunTime(med/max)=${med}ms/${mx}ms skewSplitReads=$skewReads")
-      plan.linesIterator
-        .filter(l => l.contains("ShuffledHashJoin") || (l.contains("AQEShuffleRead") && l.contains("skew")))
-        .foreach(l => println("SKEWMINHASH   plan: " + l.trim))
-    }
-    spark.stop()
-  }
-
-  /** Decompose the banded pipeline's wall time at a crossover corpus size —
-    * candidate generation vs distinct vs embedding re-join vs verify — to
-    * find which stage carries the unexplained per-row constant
-    * (Harness `crossover` r6: banded ~0.65 ms/vector regardless of shape). */
-  private def banded(args: Array[String]): Unit = {
-    val spark = Session.local(32, "time-banded")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-    import spark.implicits._
-    // default = the path Corpora.generate(spark, 20000) actually writes
-    // (the generator always appends the background-fraction suffix)
-    val dir = if (args.nonEmpty) args(0)
-      else s"/tmp/graft_crossover/n20000_bg${math.round(Corpora.BgFrac * 100)}"
-    val shape = if (args.length > 1) args(1) else "8x8"
-    val Array(t, p) = shape.split("x").map(_.toInt)
-    graft.plans.GraftFunctions.register(spark)
-    def time(label: String)(f: => Long): Unit = {
-      f // warm
-      val t0 = System.nanoTime(); val n = f
-      println(f"TIMEBANDED $label%-28s ${(System.nanoTime() - t0) / 1e9}%7.2fs rows=$n")
-    }
-    val e = Tables.embeddings(spark, dir)
-    time("corpus_scan")(e.count())
-    // stage 1: bucketing via the native lsh_buckets kernel (the composed
-    // CASE WHEN dot_product form this replaced measured 5.5 s FORCED at 20k
-    // — 275 µs/row of boxed literal access; count() alone was 0.25 s only
-    // because column pruning dropped the dots entirely)
-    val bucketed = e.select($"vec_id",
-      posexplode(expr(s"lsh_buckets(embedding, $t, $p)")).as(Seq("tbl", "bucket")))
-    time("bucketing_explode")(bucketed.count())
-    time("bucketing_forced")(
-      bucketed.agg(sum($"bucket")).head().getLong(0))
-    // stage 2: self-join candidate volume (pre-distinct)
-    val raw = bucketed.select($"tbl", $"bucket", $"vec_id".as("v1"))
-      .join(bucketed.select($"tbl", $"bucket", $"vec_id".as("v2")), Seq("tbl", "bucket"))
-      .filter($"v1" < $"v2")
-    time("selfjoin_raw_pairs")(raw.count())
-    // stage 3: distinct pairs
-    val cand = SimilarityOps.lshCandidateIds(spark, dir, t, p)
-    time("candidates_distinct")(cand.count())
-    // stage 4: re-join embeddings + verify
-    val verified = cand
-      .join(e.select($"vec_id".as("v1"), $"embedding".as("e1")), Seq("v1"))
-      .join(e.select($"vec_id".as("v2"), $"embedding".as("e2")), Seq("v2"))
-      .withColumn("cos", expr("cosine_sim(e1, e2)"))
-      .filter($"cos" >= 0.4)
-    time("rejoin_verify")(verified.count())
-    // full production query for reference
-    spark.conf.set("graft.sim.exact", "false")
-    Seq("pairs", "samelabel", "cosdedup")
-      .foreach(k => spark.conf.set(s"graft.sim.bands.$k", shape))
-    time("full_pairs_threshold") {
-      noop(SimilarityOps.pairsAboveThreshold(spark, dir)); 0L
     }
     spark.stop()
   }
@@ -1439,7 +586,7 @@ object Harness {
     */
   private def crossover(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(20000, 50000)
-    val spark = Session.local(32, "profile-crossover")
+    val spark = session("profile-crossover")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (256L << 20).toString)
     import spark.implicits._
     val queries = Seq[(String, String => DataFrame)](
@@ -1509,7 +656,7 @@ object Harness {
       sys.env.getOrElse("SPARK_GRAFT_CROSSOVER_BANDS", "8x10"))
       .toLowerCase.split(",").map(_.trim).toSeq
     val bits = if (args.length > 2) args.drop(2).map(_.toInt).toSeq else Seq(0, 1, 2, 4)
-    val spark = Session.local(32, "profile-probe")
+    val spark = session("profile-probe")
     // 256 MB: keep the exact baseline on its best (broadcast-hash) plan at
     // 250k+ vectors — at 64 MB the ~70 MB embedding side flipped to a
     // sort-merge join whose per-key group buffering spilled >50 GB (r7)
@@ -1623,7 +770,7 @@ object Harness {
     val shapes = args.lift(1).getOrElse("8x4,auto")
       .toLowerCase.split(",").map(_.trim).toSeq
     val bits = if (args.length > 2) args.drop(2).map(_.toInt).toSeq else Seq(0, 1, 2)
-    val spark = Session.local(32, "profile-dedup-probe")
+    val spark = session("profile-dedup-probe")
     // same setting as probe: keep the exact baseline on its best plan (the
     // broadcast nested-loop theta-join over the ~26 MB corpus)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (256L << 20).toString)
@@ -1711,7 +858,7 @@ object Harness {
     */
   private def docsCrossover(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(50000, 250000)
-    val spark = Session.local(32, "profile-docs-crossover")
+    val spark = session("profile-docs-crossover")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
     import spark.implicits._
     for (n <- sizes) {
@@ -1771,19 +918,54 @@ object Harness {
     }
     spark.stop()
   }
-}
 
-/** Harness-only kryo-buffered twin of [[graft.functions.TopKAgg]] for the
-  * `topk-encoder` A/B (SCALE.md round 13, bench Kryo sentinel). NOT for
-  * production: a kryo buffer ships opaque blobs and needs the JVM module
-  * opens every supported Spark launcher adds — the production heap
-  * aggregators inherit the struct encoder from
-  * [[graft.functions.BoundedTopK]].
-  */
-private final class KryoTopKAgg(k: Int) extends graft.functions.TopKAgg(k) {
-  // extends TopKAgg (not BoundedTopK) so the ordering/tie-break stays
-  // single-sourced: the A/B must compare ENCODINGS of the same
-  // aggregation, and a copied Ordering could silently drift
-  override def bufferEncoder =
-    org.apache.spark.sql.Encoders.kryo[graft.functions.TopKBuf[graft.functions.Scored]]
+  /** Write each bench query's formatted physical plan to its own file,
+    * `<outDir>/<query>_<suffix>.txt` — the before/after plan evidence of
+    * an optimization round (`plans/r21/`), and the sections of PLANS.md.
+    *
+    * With no query names, dumps the full bench set: [[graft.Bench.headline]]
+    * under gate similarity (exact) + deployment sums, and
+    * [[graft.Bench.banded]] under `graft.sim.exact=false` — the exact
+    * configurations the bench times. Named queries in `Bench.banded` take
+    * the banded route too. `dedup_minhash_lsh` additionally dumps its
+    * candidate subtree (its checkpoint truncates the main plan at `Scan
+    * ExistingRDD`, hiding the signature/banding stages), and
+    * `dedup_connected_components` one contraction round's plan (the loop
+    * runs during construction, so the query's own plan shows only the
+    * closing labels join). Dir from SPARK_GRAFT_SF_DIR (default sf0.1).
+    */
+  private def plans(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: Harness plans <outDir> <suffix> [query...]")
+    val outDir = java.nio.file.Paths.get(args(0))
+    val suffix = args(1)
+    java.nio.file.Files.createDirectories(outDir)
+    val spark = session("plans")
+    spark.conf.set("graft.sums.exact", "false")
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    def write(fileStem: String, df: DataFrame): Unit = {
+      val plan = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      java.nio.file.Files.writeString(outDir.resolve(s"${fileStem}_$suffix.txt"), plan)
+      println(s"WROTE $outDir/${fileStem}_$suffix.txt")
+    }
+    def dump(name: String): Unit = write(name, graft.SparkEntry.queries(name)(spark, dir))
+
+    val named = if (args.length > 2) args.drop(2).toSeq
+      else graft.Bench.headline ++ graft.Bench.banded
+    val (banded, headline) = named.partition(graft.Bench.banded.contains)
+    headline.foreach(dump)
+    if (headline.contains("dedup_connected_components")) {
+      val pairs = DedupOps.ngramJaccard(spark, dir).select(col("d1"), col("d2"))
+      val edges = pairs
+        .select(least(col("d1"), col("d2")).as("lo"), greatest(col("d1"), col("d2")).as("hi"))
+        .filter(col("lo") =!= col("hi")).distinct().localCheckpoint()
+      write("dedup_connected_components_round", DedupOps.contractionRound(edges))
+    }
+    if (headline.contains("dedup_minhash_lsh"))
+      write("dedup_minhash_lsh_candidates", DedupOps.minhashCandidatesPlan(spark, dir))
+    spark.conf.set("graft.sim.exact", "false")
+    banded.foreach(dump)
+    spark.conf.unset("graft.sim.exact")
+    spark.stop()
+  }
 }
